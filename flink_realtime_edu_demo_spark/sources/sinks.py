@@ -1,5 +1,5 @@
-"""Batch sinks (SURVEY.md §2.1): Flink filesystem/print/JDBC sinks
-mapped to Spark writers, with the 100 TB layout rules applied.
+"""Batch sinks (SURVEY.md §2.1): Flink filesystem sinks mapped to
+Spark writers, with the 100 TB layout rules applied.
 """
 
 from __future__ import annotations
@@ -21,22 +21,6 @@ def write_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def print_sink(df: DataFrame, n: int = 20, truncate: bool = False) -> None:
-    """Console/print sink (debug only — drives a collect of n rows)."""
-    df.show(n=n, truncate=truncate)
-
-
-def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append",
-               **options: str) -> None:
-    """JDBC sink (the ClickHouse/MySQL serving-layer sink of the Flink
-    edu-demo genre). Idempotency at scale comes from writing to a
-    staging table + MERGE keyed on the natural key, not from the writer."""
-    w = df.write.format("jdbc").option("url", url).option("dbtable", table).mode(mode)
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.save()
 
 
 def write_bucketed(

@@ -16,18 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 
-def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
-                       mode: str = "append") -> StreamingQuery:
-    """File sink with checkpointing (Flink filesystem sink + checkpoints)."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(mode)
-        .start()
-    )
-
-
 def idempotent_foreach_batch(
     df: DataFrame,
     checkpoint: str,

@@ -1024,6 +1024,82 @@ def test_session_cep_sink_string_key_snapshot_schema(spark, sf_dir):
     assert ("u1", 0) in matched  # the closed first session's A->B match
 
 
+def test_session_cep_sink_snapshot_from_batch(spark, tmp_path):
+    """SessionCepSink derives each open-session snapshot from the prior
+    snapshot and the batch alone. After every batch it equals the
+    history formula: each key's last session over the full staged
+    history, kept while open. Batch 2 carries a late row inside the gap
+    of an already closed session (u1) and a late row older than an open
+    key's snapshot time (u3); the published rows equal the batch
+    sessionized matcher restricted to closed sessions."""
+    import datetime
+    import os
+
+    from flink_realtime_edu_demo_spark.operators.cep import (
+        match_recognize_sessionized,
+        sessionize,
+    )
+    from flink_realtime_edu_demo_spark.streaming.cep import SessionCepSink
+
+    pat = [("A", "click", "1"), ("B", "purchase", "1")]
+    gap = 30
+    sink = SessionCepSink(pat, gap_minutes=gap, store_dir=str(tmp_path))
+
+    def t(hh, mm):
+        return datetime.datetime(2024, 1, 1, hh, mm)
+
+    batches = [
+        [(1, t(10, 0), 1, "click"), (1, t(10, 1), 2, "purchase"),
+         (2, t(10, 0), 3, "view"), (3, t(10, 5), 4, "click")],
+        # u1's session [10:00, 10:01] closes; u2 opens a second session
+        [(2, t(10, 40), 5, "click"), (3, t(10, 20), 6, "purchase")],
+        # late rows: u1 inside its closed session's gap, u3 before its
+        # snapshot time (u3 stays open on its 10:20 row); u2's second
+        # session holds a match but stays open, so it is withheld
+        [(1, t(10, 10), 7, "view"), (3, t(10, 10), 8, "view"),
+         (2, t(10, 45), 9, "purchase")],
+    ]
+    schema = "user_id long, ts timestamp_ntz, event_id long, event_type string"
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    interval = F.expr(f"INTERVAL {gap} MINUTES")
+    for batch_id, rows in enumerate(batches):
+        sink.write_batch(spark.createDataFrame(rows, schema), batch_id)
+        staged = spark.read.schema(schema).parquet(sink.staging_dir).drop("b")
+        max_ts = staged.agg(F.max("ts")).collect()[0][0]
+        bounds = sessionize(staged, gap).groupBy("user_id", "session_id").agg(
+            F.max("ts").alias("last_ts"))
+        last = {}
+        for r in bounds.collect():
+            if r.user_id not in last or r.session_id > last[r.user_id][0]:
+                last[r.user_id] = (r.session_id, r.last_ts)
+        want = {(k, ts) for k, (_, ts) in last.items()
+                if ts + datetime.timedelta(minutes=gap) > max_ts}
+        snap = spark.read.schema("user_id long, __last_ts timestamp_ntz").parquet(
+            f"{sink.meta_dir}/b={batch_id}")
+        got = {tuple(r) for r in snap.collect()}
+        assert got == want, (batch_id, got, want)
+        closed = bounds.filter(F.col("last_ts") + interval <= F.lit(max_ts))
+        want_rows = {
+            tuple(r) for r in match_recognize_sessionized(staged, pat, gap)
+            .join(closed.select("user_id", "session_id"),
+                  ["user_id", "session_id"])
+            .select("user_id", "session_id", "match_no", "first_event_id",
+                    "last_event_id").collect()
+        }
+        got_rows = set()
+        if os.path.isdir(sink.results_dir):
+            got_rows = {
+                tuple(r) for r in spark.read.parquet(sink.results_dir).select(
+                    "user_id", "session_id", "match_no", "first_event_id",
+                    "last_event_id").collect()
+            }
+        assert got_rows == want_rows, (batch_id, got_rows, want_rows)
+    assert set(sink.emitted) == {(1, 0, 1)}
+    assert sink.emitted_per_batch == [0, 1, 0]
+    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert cached_after <= cached_before, cached_after - cached_before
+
+
 def test_lsh_planes_for_matches_sql_derivation():
     """lsh_planes_for's integer rule (smallest m in [4,24] with
     target·2^m >= n) must agree with the SQL derivation embedded in

@@ -154,7 +154,7 @@ def test_statement_set_multi_sink_one_pass(spark, sf_dir, stream_dir, tmp_path):
     q = multi_sink_statement_set(
         sdf, checkpoint=str(tmp_path / "ckpt"), sinks=sinks, mode="append"
     )
-    q.awaitTermination(60)
+    q.processAllAvailable()
     q.stop()
     ev_b = load(spark, sf_dir, "events").select(*sdf.columns)
     for name, tf in transforms.items():
@@ -626,6 +626,7 @@ def test_streaming_cep_distributed_publish_path(spark, sf_dir, stream_dir, tmp_p
            ("P", "purchase", "1")]
     gap = 720
     ev_stream = stream_table(spark, stream_dir, "events")
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     sink = SessionCepSink(pat, gap_minutes=gap, observe=False)
     q = start_session_cep(ev_stream, str(tmp_path / "cep_dist_ckpt"), sink)
     q.processAllAvailable()
@@ -636,6 +637,13 @@ def test_streaming_cep_distributed_publish_path(spark, sf_dir, stream_dir, tmp_p
         "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, "
         "event_type STRING, value DOUBLE, props STRING"
     ).parquet(f"{stream_dir}/events_stream")
+    # one read per source row: every use of a micro-batch reads it from
+    # the persisted batch, not from the source again
+    read = sum(p["numInputRows"] for p in q.recentProgress)
+    assert read == ev.count(), (read, ev.count())
+    # and every persist of the sink is released
+    cached_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert cached_after <= cached_before, cached_after - cached_before
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
     sess = sessionize(ev, gap)
     closed = (
